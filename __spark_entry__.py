@@ -95,12 +95,19 @@ def _spark_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return change_stream(spark, sf_dir)
 
 
+# Nodes the single-partition walk may pass through: each keeps its
+# child's partitioning row for row. Anything else (aggregates, joins,
+# windows, global sorts, generators, nodes Spark adds later) stops the
+# walk, fail-closed like text._SCAN_SHAPED_NODES.
+_NARROW_PLAN_NODES = frozenset({"Project", "Filter", "SubqueryAlias"})
+
+
 def _assert_single_partition_plan(df: DataFrame) -> None:
     """Assert the frame's analyzed plan pins it to ONE partition (the
-    nearest repartition-class node below any narrow ops is
-    Repartition(1)) — the precondition for treating
-    monotonically_increasing_id as an append-order rank. Plan walk
-    only: no job, no AQE finalization."""
+    nearest repartition-class node below a chain of narrow nodes —
+    _NARROW_PLAN_NODES plus partition-local sorts — is Repartition(1))
+    — the precondition for treating monotonically_increasing_id as an
+    append-order rank. Plan walk only: no job, no AQE finalization."""
     node = df._jdf.queryExecution().analyzed()
     while True:
         name = node.getClass().getSimpleName()
@@ -111,12 +118,13 @@ def _assert_single_partition_plan(df: DataFrame) -> None:
                     f"append-order offsets need a single-partition "
                     f"frame; plan pins {n} partitions via {name}")
             return
-        children = node.children()
-        if children.size() != 1:
+        local_sort = name == "Sort" and not getattr(node, "global")()
+        if name not in _NARROW_PLAN_NODES and not local_sort:
             raise AssertionError(
                 "append-order offsets need a single-partition frame; "
-                f"no Repartition(1) found (stopped at {name})")
-        node = children.apply(0)
+                f"no Repartition(1) below narrow nodes (stopped at "
+                f"{name})")
+        node = node.children().apply(0)
 
 
 # ---------------------------------------------------------------------------

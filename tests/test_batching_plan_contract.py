@@ -108,3 +108,26 @@ def test_txn_batches_match_driver_prefix_sum(spark):
     for t, s in zip(ts, sizes):
         assert got[int(t)] == cum // 10, int(t)
         cum += int(s)
+
+
+def test_single_partition_walk_passes_only_narrow_nodes(spark):
+    """The append-order offset guard walks down through narrow nodes
+    only: an aggregate, a global sort or a join over Repartition(1)
+    must raise, since none of them is guaranteed to keep one
+    partition (an aggregate re-shuffles to the shuffle partitions)."""
+    import __spark_entry__ as m
+    from tests.conftest import make_changes
+    from tidb_binlog_spark.sinks import kafka
+
+    df = spark.range(100).withColumn("g", F.col("id") % 3)
+    one = df.repartition(1)
+    m._assert_single_partition_plan(
+        one.sortWithinPartitions("id").select("id", "g").filter("id > 1"))
+    m._assert_single_partition_plan(kafka.kafka_frame(
+        make_changes(spark, [(1, "s0", 10, "I", 1)]), cluster_id=42))
+    for wide in (one.groupBy("g").agg(F.count("*").alias("n")),
+                 one.orderBy("id"),
+                 one.join(df, "id"),
+                 df.repartition(4)):
+        with pytest.raises(AssertionError):
+            m._assert_single_partition_plan(wide)

@@ -44,7 +44,7 @@ from pyspark.sql import types as T
 # 190 -> 339 s). 500k edges: local 3.3 s vs distributed 4.5 s — still
 # a win, and every registry/bench graph (39k-400k edges) stays local.
 # Tunable per deployment via SPARK_GRAFT_CC_LOCAL_EDGES (0 disables
-# the local path and skips the gate count entirely).
+# the local path and skips its bounded collect entirely).
 LOCAL_CC_MAX_EDGES = 500_000
 
 
@@ -138,12 +138,15 @@ def causality_groups(txn_keys: DataFrame, max_iter: int = 50,
     touches. Returns (txn_id, group_id) where group_id = min txn_id of
     the connected component.
 
-    Adaptive physical strategy (r10): one cheap count on the persisted
-    edge frame picks between a driver union-find (small graphs — see
-    LOCAL_CC_MAX_EDGES) and the distributed min-propagation fixpoint
-    (everything else). Both paths compute the identical min-txn_id
-    component labeling; tests/test_operators.py asserts their
-    equality on randomized graphs.
+    Adaptive physical strategy (r10): one bounded collect of the
+    distinct edge list picks between a driver min-label fixpoint
+    (small graphs — see LOCAL_CC_MAX_EDGES) and the distributed
+    min-propagation fixpoint (everything else). The collect is one
+    job with no persist and no separate count: it takes at most one
+    edge past the gate, so a graph above it never reaches the driver
+    whole. Both paths compute the identical min-txn_id component
+    labeling; tests/test_operators.py asserts their equality on
+    randomized graphs.
 
     Distributed path: each iteration's labels are localCheckpoint'ed —
     this both caches the data (the convergence check would otherwise
@@ -154,6 +157,14 @@ def causality_groups(txn_keys: DataFrame, max_iter: int = 50,
     split component would let order-dependent txns apply in parallel,
     the exact corruption this operator prevents.
     """
+    return _sized_groups(txn_keys, max_iter, local_threshold)[0]
+
+
+def _sized_groups(txn_keys: DataFrame, max_iter: int = 50,
+                  local_threshold: int | None = None):
+    """:func:`causality_groups` plus its row count when the labels were
+    built on the driver (None after the distributed fixpoint), so
+    :func:`stamp_workers` need not count them again."""
     if local_threshold is None:
         import os
         local_threshold = int(os.environ.get(
@@ -164,10 +175,28 @@ def causality_groups(txn_keys: DataFrame, max_iter: int = 50,
     edges = txn_keys.select("txn_id", "key").distinct() \
                     .filter(F.col("txn_id").isNotNull()
                             & F.col("key").isNotNull())
+    if local_threshold:
+        epdf = edges.limit(local_threshold + 1).toPandas()  # Arrow batches
+        if len(epdf) <= local_threshold:
+            id_type = txn_keys.schema["txn_id"].dataType
+            schema = T.StructType([T.StructField("txn_id", id_type),
+                                   T.StructField("group_id", id_type)])
+            spark = txn_keys.sparkSession
+            if epdf.empty:
+                return spark.createDataFrame([], schema=schema), 0
+            # numpy min-label fixpoint (r12) — the python union-find
+            # (_local_components) stays as the parity oracle in tests
+            import numpy as np
+            import pandas as pd
+            kcodes, _ = pd.factorize(epdf["key"])
+            ut, lab = _local_components_np(
+                epdf["txn_id"].to_numpy(np.int64),
+                kcodes.astype(np.int64), int(kcodes.max()) + 1)
+            pdf = pd.DataFrame({"txn_id": ut, "group_id": lab})
+            return spark.createDataFrame(pdf, schema=schema), len(pdf)
     edges.persist()
     try:
-        return _causality_groups_on_edges(
-            txn_keys, edges, max_iter, local_threshold)
+        return _distributed_groups(edges, max_iter), None
     finally:
         edges.unpersist()
 
@@ -188,35 +217,16 @@ def _cc_shuffle_partitions(n_edges: int) -> int:
     return p
 
 
-def _causality_groups_on_edges(txn_keys, edges, max_iter,
-                               local_threshold):
-    id_type = txn_keys.schema["txn_id"].dataType
-
+def _distributed_groups(edges, max_iter):
+    """The min-propagation fixpoint over the persisted edge frame."""
     n_edges = edges.count()
-    if local_threshold and n_edges <= local_threshold:
-        import numpy as np
-        import pandas as pd
-        epdf = edges.toPandas()            # Arrow batch transfer
-        schema = T.StructType([T.StructField("txn_id", id_type),
-                               T.StructField("group_id", id_type)])
-        if epdf.empty:
-            return txn_keys.sparkSession.createDataFrame([], schema=schema)
-        # numpy min-label fixpoint (r12) — the python union-find
-        # (_local_components) stays as the parity oracle in tests
-        kcodes, _ = pd.factorize(epdf["key"])
-        ut, lab = _local_components_np(
-            epdf["txn_id"].to_numpy(np.int64),
-            kcodes.astype(np.int64), int(kcodes.max()) + 1)
-        pdf = pd.DataFrame({"txn_id": ut, "group_id": lab})
-        return txn_keys.sparkSession.createDataFrame(pdf, schema=schema)
-
     # scoped shuffle sizing for the fixpoint rounds (see
     # _cc_shuffle_partitions). The session conf is restored after the
     # loop; every round's labels are localCheckpoint'ed, so downstream
     # consumers never re-execute these shuffles under the restored
     # conf. Single-driver pipelines run one foreachBatch at a time,
     # which is the context this operator executes in.
-    spark = txn_keys.sparkSession
+    spark = edges.sparkSession
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
                    str(_cc_shuffle_partitions(n_edges)))
@@ -277,12 +287,12 @@ def _cc_fixpoint(edges, max_iter):
 
 def stamp_workers(changes: DataFrame, groups: DataFrame,
                   num_workers: int = 16,
-                  txn_col: str = "commit_ts") -> DataFrame:
+                  txn_col: str = "commit_ts",
+                  n_groups: int | None = None) -> DataFrame:
     """Stamp a (txn_id, group_id) labeling onto the statement frame as
     (group_id, worker_id) — the join half of
-    :func:`conflict_free_partitions`, split out so the apply profile
-    can clock the CC fixpoint and the big-frame stamp separately
-    (VERDICT r12 item 1).
+    :func:`conflict_free_partitions`, split out so a traced replay can
+    clock the CC fixpoint and the big-frame stamp separately.
 
     worker_id is computed on the SMALL groups frame before the join
     (one row per txn, not per statement) and the join side is
@@ -290,13 +300,14 @@ def stamp_workers(changes: DataFrame, groups: DataFrame,
     bounded by the micro-batch's txn count, not corpus size), so the
     statement frame keeps its partitioning instead of shuffling
     through a sort-merge join (r13 A/B at 10M events; numbers in
-    SCALING.md). The count guarding the hint is cheap: the
-    distributed fixpoint localCheckpoints its final labels and the
-    local gate builds them on the driver. Past the cap (default 8M
-    txns ~ 200MB serialized) the stamp falls back to the shuffle
-    join rather than force an oversized broadcast. Unmatched txns
-    (no key rows) fall back to singleton groups and get the same
-    hash, applied post-join on the big frame only for NULL rows."""
+    SCALING.md). The count guarding the hint is ``n_groups`` when the
+    caller knows it (labels built on the driver), else one cheap
+    count over the distributed fixpoint's localCheckpointed labels.
+    Past the cap (default 8M txns ~ 200MB serialized) the stamp falls
+    back to the shuffle join rather than force an oversized
+    broadcast. Unmatched txns (no key rows) fall back to singleton
+    groups and get the same hash, applied post-join on the big frame
+    only for NULL rows."""
     import os
     small = groups.select(
         F.col("txn_id"),
@@ -305,7 +316,9 @@ def stamp_workers(changes: DataFrame, groups: DataFrame,
                F.lit(num_workers)).alias("worker_id"))
     cap = int(os.environ.get("SPARK_GRAFT_STAMP_BROADCAST_MAX",
                              8_000_000))
-    if cap > 0 and groups.count() <= cap:
+    if n_groups is None and cap > 0:
+        n_groups = groups.count()
+    if cap > 0 and n_groups <= cap:
         small = F.broadcast(small)
     out = changes.join(small,
                        changes[txn_col] == small.txn_id, "left") \
@@ -334,5 +347,6 @@ def conflict_free_partitions(changes: DataFrame, txn_keys: DataFrame,
     Txns with no key rows are singleton groups (their own id) — a NULL
     group would hash every unmatched txn onto one worker.
     """
-    return stamp_workers(changes, causality_groups(txn_keys),
-                         num_workers=num_workers, txn_col=txn_col)
+    groups, n_groups = _sized_groups(txn_keys)
+    return stamp_workers(changes, groups, num_workers=num_workers,
+                         txn_col=txn_col, n_groups=n_groups)

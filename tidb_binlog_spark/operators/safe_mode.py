@@ -9,9 +9,9 @@ Reference:
   DELETE(old key) + INSERT(new key) before compaction
   (pkg/loader/merge.go:47-67).
 
-Spark-first: both are projections/unions — the split is a union of two
-narrow selects (no shuffle); ordering is preserved by (commit_ts, seq,
-sub_seq).
+Spark-first: neither shuffles — the split is a union of narrow selects
+and the safe-mode rewrite one exploding projection; ordering is
+preserved by (commit_ts, seq, sub_seq).
 """
 
 from __future__ import annotations
@@ -71,14 +71,27 @@ def safe_mode_rewrite(changes: DataFrame) -> DataFrame:
     Returned stream is directly applicable by a dumb sink in order:
     REPLACE upserts, DELETE removes — replaying the same batch twice
     converges to the same table state.
+
+    One narrow projection: each row explodes its rewrite list of
+    (op, sub_seq) pairs — I -> [R/0], U -> [D/0, R/1], D -> [D/0] —
+    and any other op (DDL, FAKE, NULL) has no list and is dropped. The
+    input is read once, so callers need not cache it. An existing
+    ``sub_seq`` column is overwritten in place, otherwise it is
+    appended. A D row keeps its own ``op`` value so the output schema
+    (nullability included) matches the input's.
     """
-    inserts = (changes.filter(F.col("op") == "I")
-               .withColumn("op", F.lit("R"))
-               .withColumn("sub_seq", F.lit(0)))
-    deletes = (changes.filter(F.col("op") == "D")
-               .withColumn("sub_seq", F.lit(0)))
-    upd = changes.filter(F.col("op") == "U")
-    upd_delete = upd.withColumn("op", F.lit("D")).withColumn("sub_seq", F.lit(0))
-    upd_replace = upd.withColumn("op", F.lit("R")).withColumn("sub_seq", F.lit(1))
-    return (inserts.unionByName(deletes)
-            .unionByName(upd_delete).unionByName(upd_replace))
+    op = F.col("op")
+
+    def pair(new_op, sub_seq: int):
+        return F.struct(new_op.alias("op"), F.lit(sub_seq).alias("sub_seq"))
+
+    rewrites = (F.when(op == "I", F.array(pair(F.lit("R"), 0)))
+                .when(op == "U", F.array(pair(F.lit("D"), 0),
+                                         pair(F.lit("R"), 1)))
+                .when(op == "D", F.array(pair(op, 0))))
+    out = [F.col(f"_rw.{c}").alias(c) if c in ("op", "sub_seq")
+           else F.col(f"`{c}`") for c in changes.columns]
+    if "sub_seq" not in changes.columns:
+        out.append(F.col("_rw.sub_seq").alias("sub_seq"))
+    return (changes.select("*", F.explode(rewrites).alias("_rw"))
+            .select(*out))

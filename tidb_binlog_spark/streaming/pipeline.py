@@ -114,7 +114,24 @@ class SqlBatchApplier:
     window through the IDENTICAL machinery: resume filter, order
     gate, config filter/route stages, DDL barriers with immediate
     checkpoints, per-table statement widths, causality-routed
-    shared-downstream apply."""
+    shared-downstream apply.
+
+    A micro-batch's fixed cost is its Spark actions; ``apply`` runs
+    these, in order:
+
+    1. the relay WAL write (when a relay log is wired), which also
+       fills the cache of the raw batch;
+    2. one probe aggregate over the cached raw batch: watermark, DDL
+       row count and the (routed) table set;
+    3. the capped DDL collect, only when the probe counted a DDL row;
+    4. per DML segment (the whole batch when it carries no DDL), the
+       two actions listed on :meth:`_apply_dml`.
+
+    The order gate runs once: on its way into the cached statement
+    input, or into the cached gated frame when DDL splits the batch.
+    tests/test_sql_apply_passes.py holds the job count of a DDL-free
+    batch.
+    """
 
     # DDL rows are collect()ed per batch to sequence barriers; DDL is
     # rare by nature, so this is bounded in any sane stream — the cap
@@ -153,23 +170,55 @@ class SqlBatchApplier:
         except LookupError:     # table not created yet: setup_sql width
             return ("pk", "val")
 
-    def _apply_dml(self, seg: DataFrame, ckpt_ts: int) -> None:
-        """Order-gated DML sub-batch -> safe-mode rewrite -> per-table
-        statement build -> causality-routed parallel apply."""
+    def _probe(self, live: DataFrame):
+        """One aggregate over the cached raw batch: the watermark (FAKE
+        heartbeats and rows the gate or a filter drops still advance
+        it), the DDL row count, and the sorted set of tables with DML
+        rows, under routed names when the config routes. The count and
+        the set cover rows the gate and the filters will drop, so both
+        are supersets: the DDL rows are collected only when the count
+        is non-zero, and a table with no surviving rows yields no
+        statements. A heartbeat-only batch has no tables and stops
+        after this probe."""
+        tbl = "tbl"
+        if self.cfg is not None and self.cfg.route_rules:
+            from ..operators import router
+            live = router.route_tables(live, self.cfg.route_rules)
+            tbl = "target_tbl"
+        return live.agg(
+            F.max("commit_ts").alias("wm"),
+            F.count(F.when(F.col("op") == "DDL", 1)).alias("n_ddl"),
+            F.array_sort(F.collect_set(
+                F.when(~F.col("op").isin("FAKE", "DDL"), F.col(tbl))))
+            .alias("tables")).first()
+
+    def _apply_dml(self, seg: DataFrame, ckpt_ts: int,
+                   tables: list[str]) -> None:
+        """Order-gated DML segment -> safe-mode rewrite -> per-table
+        statement build -> causality-routed parallel apply.
+
+        ``tables`` may be a superset of the segment's tables (the
+        batch probe's set). The rewritten segment is cached unread;
+        two Spark actions follow, the first of which fills the cache
+        (gate and rewrite run once):
+
+        1. the causality edge collect (one bounded job on the local
+           path; the fixpoint rounds above its edge limit);
+        2. the DB-API apply: repartition by worker, then one
+           foreachPartition transaction per worker.
+        """
         from ..operators import causality
         from ..operators import safe_mode as sm
         from ..sinks import jdbc, sqlgen
         catalog, num_workers = self.catalog, self.num_workers
+        if not tables:
+            jdbc.save_checkpoint(self.db_dir, ckpt_ts)
+            return
         if self.window.active():
             prepared = sm.safe_mode_rewrite(seg)
         else:
             prepared = seg.withColumn("sub_seq", F.lit(0))
         prepared = prepared.persist()
-        tables = [r["tbl"] for r in prepared.select("tbl").distinct().collect()]
-        if not tables:
-            prepared.unpersist()
-            jdbc.save_checkpoint(self.db_dir, ckpt_ts)
-            return
         # per-table statement width (few tables; the per-table build is
         # a union of narrow projections over the SAME cached sub-batch)
         stmts = None
@@ -223,62 +272,14 @@ class SqlBatchApplier:
             stmts, txn_keys, num_workers=num_workers,
             txn_col="commit_ts")
         import os as _os
-        prof_path = _os.environ.get("SPARK_GRAFT_APPLY_PROFILE")
-        shard_files = bool(_os.environ.get("SPARK_GRAFT_APPLY_SHARD_FILES"))
-        if prof_path:
-            # profile mode (VERDICT r11 item 5; r12 item 1 splits the
-            # routing leg): materialize each stage so "rewrite +
-            # sqlgen", "CC fixpoint", "big-frame stamp join", and
-            # "DB-API execution" get separate wall clocks in the
-            # JSONL record. The extra persists change absolute
-            # timing — profile numbers are for decomposition, not
-            # headline rates.
-            import json as _json
-            import time as _time
-            t0 = _time.time()
-            stmts = stmts.persist()
-            n_stmts = stmts.count()
-            t_gen = _time.time() - t0           # rewrite + sqlgen
-            t0 = _time.time()
-            groups = causality.causality_groups(txn_keys).persist()
-            n_groups = groups.count()
-            t_cc = _time.time() - t0            # CC fixpoint alone
-            t0 = _time.time()
-            routed = causality.stamp_workers(
-                stmts, groups, num_workers=num_workers,
-                txn_col="commit_ts").persist()
-            routed.count()
-            t_stamp = _time.time() - t0         # big-frame stamp join
-            t0 = _time.time()
-            jdbc.apply_statements(routed, self.db_dir, num_workers,
-                                  setup_sql=self.setup_sql,
-                                  checkpoint_ts=ckpt_ts,
-                                  shared_db=True,
-                                  shard_files=shard_files)
-            t_dbapi = _time.time() - t0
-            with open(prof_path, "a") as fh:
-                fh.write(_json.dumps(
-                    {"ckpt_ts": ckpt_ts, "n_stmts": int(n_stmts),
-                     "n_txn_groups": int(n_groups),
-                     "stmt_gen_sec": round(t_gen, 3),
-                     "causality_cc_sec": round(t_cc + t_stamp, 3),
-                     "cc_fixpoint_sec": round(t_cc, 3),
-                     "stamp_sec": round(t_stamp, 3),
-                     "dbapi_exec_sec": round(t_dbapi, 3),
-                     "shard_files": shard_files}) + "\n")
-            routed.unpersist()
-            groups.unpersist()
-            stmts.unpersist()
-        else:
-            # shared_db: the downstream is ONE database (the
-            # reference's topology) — causality worker ids vary per
-            # batch, which is only sound when routing doesn't decide
-            # row placement
-            jdbc.apply_statements(routed, self.db_dir, num_workers,
-                                  setup_sql=self.setup_sql,
-                                  checkpoint_ts=ckpt_ts,
-                                  shared_db=True,
-                                  shard_files=shard_files)
+        # shared_db: the downstream is ONE database (the reference's
+        # topology) — causality worker ids vary per batch, which is
+        # only sound when routing doesn't decide row placement
+        jdbc.apply_statements(
+            routed, self.db_dir, num_workers, setup_sql=self.setup_sql,
+            checkpoint_ts=ckpt_ts, shared_db=True,
+            shard_files=bool(_os.environ.get(
+                "SPARK_GRAFT_APPLY_SHARD_FILES")))
         prepared.unpersist()
 
     def apply(self, batch_df: DataFrame) -> None:
@@ -287,10 +288,8 @@ class SqlBatchApplier:
         from ..operators import ddl as ddl_mod
         from ..sinks import jdbc
         catalog = self.catalog
-        # persist the RAW batch first: the relay WAL and the filtered
-        # main path both read it (one source scan, not two); the
-        # safe-mode rewrite is a 4-way union over the gated stream and
-        # would re-scan per branch without the cache
+        # persist the RAW batch first: the relay WAL, the probe and the
+        # gated main path all read it (one source scan, not three)
         batch_df = batch_df.persist()
         # chaos kill points (tools/stream_kill_resume.py): hard driver
         # death at the Nth apply() call in this process — BEFORE_WAL
@@ -311,17 +310,16 @@ class SqlBatchApplier:
             self.relay.append(batch_df)     # WAL before any apply
         if _ca and _CHAOS_APPLY_CALLS >= int(_ca):
             _os._exit(137)
-        batch_df2 = batch_df
-        batch_df = batch_df.filter(F.col("commit_ts") > self.resume_ts)
-        wm_row = batch_df.agg(F.max("commit_ts").alias("wm")).collect()[0]
-        if wm_row["wm"] is None:        # batch fully below the cursor
-            batch_df2.unpersist()
+        live = batch_df.filter(F.col("commit_ts") > self.resume_ts)
+        probe = self._probe(live)
+        if probe["wm"] is None:         # batch fully below the cursor
+            batch_df.unpersist()
             return
-        wm = int(wm_row["wm"])
-        # FAKE heartbeats advance the watermark (computed above) but
+        wm = int(probe["wm"])
+        # FAKE heartbeats advance the watermark (probed above) but
         # must never reach the statement builder — generate_sql has no
         # case for them and would emit NULL sql_text.
-        ok = (ordering.ordered_stream(batch_df)
+        ok = (ordering.ordered_stream(live)
               .filter(F.col("op") != "FAKE"))
         if self.cfg is not None:
             from ..plans.pipeline import apply_filters_and_routes
@@ -331,7 +329,6 @@ class SqlBatchApplier:
                 ok = (ok.withColumn("db", F.col("target_db"))
                       .withColumn("tbl", F.col("target_tbl"))
                       .drop("target_db", "target_tbl"))
-        ok = ok.persist()
         # DDL events (op = 'DDL', statement text in row_json) split the
         # batch into barriers: DML below the DDL applies first, then
         # the DDL runs on every shard with the catalog evicted and the
@@ -339,7 +336,10 @@ class SqlBatchApplier:
         # statements against the POST-DDL schema
         # (drainer/syncer.go:433-537; pkg/loader/load.go:401-496).
         ddl_rows = []
-        if self.sync_ddl:
+        if self.sync_ddl and probe["n_ddl"]:
+            # the DDL collect and every barrier segment read the gated
+            # frame: cache it so the gate runs once
+            ok = ok.persist()
             cap = self.max_ddl_per_batch
             # limit(cap+1) bounds what ever reaches the driver; the
             # overflow check turns a silent OOM into a clear error.
@@ -351,18 +351,20 @@ class SqlBatchApplier:
                 .orderBy("commit_ts").limit(cap + 1).collect())
             if len(ddl_rows) > cap:
                 ok.unpersist()
-                batch_df2.unpersist()
+                batch_df.unpersist()
                 raise RuntimeError(
                     f"SqlBatchApplier: batch carries more than "
                     f"{cap} DDL events — refusing to collect a DDL "
                     f"storm onto the driver; split the stream or "
                     f"raise max_ddl_per_batch")
         dml = ok.filter(F.col("op") != "DDL")
+        tables = list(probe["tables"])
         lo = self.resume_ts
         for d in ddl_rows:
             seg = dml.filter((F.col("commit_ts") > lo)
                              & (F.col("commit_ts") < d["commit_ts"]))
-            self._apply_dml(seg, ckpt_ts=int(d["commit_ts"]) - 1)
+            self._apply_dml(seg, ckpt_ts=int(d["commit_ts"]) - 1,
+                            tables=tables)
             if not d["should_skip"]:
                 # sqlite shards are single-database files, so the
                 # mysql-wire `USE db;` prefix (apply_sql) is moot —
@@ -376,9 +378,10 @@ class SqlBatchApplier:
                 catalog.evict("main", d["tbl"])
             jdbc.save_checkpoint(self.db_dir, int(d["commit_ts"]))
             lo = int(d["commit_ts"])
-        self._apply_dml(dml.filter(F.col("commit_ts") > lo), ckpt_ts=wm)
+        self._apply_dml(dml.filter(F.col("commit_ts") > lo), ckpt_ts=wm,
+                        tables=tables)
         ok.unpersist()
-        batch_df2.unpersist()
+        batch_df.unpersist()
 
 
 def feed_sql_by_relay_if_needed(spark: SparkSession, relay, db_dir: str,

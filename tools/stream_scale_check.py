@@ -69,8 +69,8 @@ def main() -> None:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         ".scale", "sf1")
     n_segments = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    # "sql" runs only stream 1 (the r12 profile campaign drives the
-    # SQL-apply leg alone, with SPARK_GRAFT_APPLY_PROFILE set)
+    # "sql" runs only stream 1, the SQL-apply leg alone (its per-layer
+    # split comes from perfbench/run.py --workload catchup --trace 1)
     only = sys.argv[3] if len(sys.argv) > 3 else "all"
     # Aggressive periodic ContextCleaner GC: with a 48g driver heap,
     # driver GC almost never fires on its own, so shuffle files and
@@ -90,12 +90,12 @@ def main() -> None:
         ch = (change_stream(spark, sf_dir)
               .withColumn("tbl", F.concat_ws("_", "db", "tbl"))
               .select(*STREAM_COLS))
-        # profile-mode relief valve: with no sink catalog wired the
+        # heap relief valve: with no sink catalog wired the
         # SQL-apply path never reads row_json, and carrying the full
         # image through a 100M-event landing put this host's 24g heap
         # over the edge (r12 OOM during the segment writes). Blanked
         # images change no apply semantics; absolute ev/s is recorded
-        # as profile-mode, not compared against image-carrying runs.
+        # as blanked-image, not compared against image-carrying runs.
         if os.environ.get("STREAM_SCALE_BLANK_ROWJSON"):
             ch = ch.withColumn("row_json", F.lit("{}"))
             out["row_json_blanked"] = True
